@@ -63,11 +63,6 @@ object Dsir {
       pmod(conv(substring(md5(g), 1, 13), 16, 10).cast("long"),
         lit(buckets.toLong)))
 
-  /** (bucket, cnt) histogram of a corpus — `buckets`-bounded output. */
-  def bucketHistogram(df: DataFrame, textCol: String, buckets: Int): DataFrame =
-    df.select(explode(ngramBuckets(col(textCol), buckets)).as("bucket"))
-      .groupBy("bucket").agg(count(lit(1)).as("cnt"))
-
   /** Shared plumbing of both weight flavors: histograms → distributed
     * per-bucket term table (broadcast under `broadcastBuckets`) →
     * scoring join → per-doc exact DECIMAL(28,12) sum, with the exploded
@@ -181,20 +176,6 @@ object Dsir {
     val (w, _) = weightsCore(raw, idCol, textCol, target, targetTextCol,
       buckets, broadcastBuckets, ngramBuckets, logRatioTerm, "log_w",
       cache = false)
-    w
-  }
-
-  /** The oracle twin of [[importanceWeights]]: md5 bucket ids and the
-    * linear term — same plumbing at the same scale bounds, engine-exact
-    * everywhere. Positive w = "more target-like", like log w.
-    */
-  def importanceWeightsMd5Linear(raw: DataFrame, idCol: String,
-      textCol: String, target: DataFrame, targetTextCol: String,
-      buckets: Int = 8192,
-      broadcastBuckets: Long = 4L * 1000 * 1000): DataFrame = {
-    val (w, _) = weightsCore(raw, idCol, textCol, target, targetTextCol,
-      buckets, broadcastBuckets, ngramBucketsMd5, linearTerm, "w",
-      cache = false, spreadInput = true)
     w
   }
 

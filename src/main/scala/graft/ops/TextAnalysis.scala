@@ -49,10 +49,6 @@ object TextAnalysis {
     size(filter(w, x => array_contains(arr, x))).cast("long")
   }
 
-  /** Count of tokens contained in `vocab` (with multiplicity). */
-  def vocabHits(text: Column, vocab: Seq[String]): Column =
-    vocabHitsOf(words(text), vocab)
-
   /** N-gram-heuristic language ID: score each profile by stopword hits,
     * pick the argmax with a fixed tiebreak order (profile declaration
     * order). Returns (score columns ×5, predicted) — callers select what

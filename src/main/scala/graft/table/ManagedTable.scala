@@ -798,7 +798,7 @@ final class ManagedTable(spark: SparkSession, val path: String)
   }
 
   /** The distributed-assembly base of logged version `v`: the nearest
-    * parquet-checkpoint sidecars at or below `v` plus the intervening
+    * parquet-checkpoint sidecar at or below `v` plus the intervening
     * deltas folded into net (adds, removed) sets of
     * O(churn-since-checkpoint) — the walk-back shared by the planner job
     * ([[keptByStatsDistributed]]) and the streaming snapshot assembly
@@ -808,44 +808,29 @@ final class ManagedTable(spark: SparkSession, val path: String)
     * driver path's loud error handles it).
     */
   private def distributedBase(
-      v: Long): Option[(Seq[Path], Seq[String], Set[String])] = {
+      v: Long): Option[(Path, Seq[String], Set[String])] = {
     if (isShallowClone || v < 0) return None
     // walk back to the nearest checkpoint manifest (O(interval) small
     // driver reads); the deltas fold into net add/remove sets of
     // O(churn-since-checkpoint)
     var i = v
-    var ckpt: Option[Seq[Path]] = None
+    var ckpt: Option[Path] = None
     val deltas = scala.collection.mutable.ListBuffer[(Seq[String], Seq[String])]()
     while (ckpt.isEmpty) {
       if (i < 0) return None
-      // retro (async) checkpoint sidecars serve as the base exactly like
-      // manifest-embedded ones; a dangling retro falls through to the
-      // version's own manifest. An INLINE-format retro ends the walk
-      // (no parquet base — the driver fold reads it), and so does the
-      // log-cleanup horizon: a retro-anchored cleanupLog deletes the
-      // manifests below its pointer, so the walk must answer None (→ the
-      // always-correct driver fold), never throw
-      val rt = retroText(i)
-      if (rt.exists(t => scala.util.Try(
-          jsonStringArray(t, "files").isDefined).getOrElse(false)))
-        return None
-      val retro = rt.flatMap(checkpointSidecarsOf)
-        .map(_.map(n => new Path(logDir, n))).filter(_.forall(fs.exists))
-      retro match {
-        case Some(ps) => ckpt = Some(ps)
+      // the log-cleanup horizon ends the walk too: a missing manifest
+      // answers None (→ the always-correct driver fold), never throws
+      val txt = scala.util.Try(manifestText(i)).getOrElse(return None)
+      checkpointSidecarOf(txt) match {
+        case Some(name) =>
+          val p = new Path(logDir, name)
+          if (!fs.exists(p)) return None
+          ckpt = Some(p)
         case None =>
-          val txt = scala.util.Try(manifestText(i)).getOrElse(return None)
-          checkpointSidecarsOf(txt) match {
-            case Some(names) =>
-              val ps = names.map(n => new Path(logDir, n))
-              if (!ps.forall(fs.exists)) return None
-              ckpt = Some(ps)
-            case None =>
-              if (jsonStringArray(txt, "files").isDefined) return None
-              deltas.prepend((jsonStringArray(txt, "add").getOrElse(Nil),
-                jsonStringArray(txt, "remove").getOrElse(Nil)))
-              i -= 1
-          }
+          if (jsonStringArray(txt, "files").isDefined) return None
+          deltas.prepend((jsonStringArray(txt, "add").getOrElse(Nil),
+            jsonStringArray(txt, "remove").getOrElse(Nil)))
+          i -= 1
       }
     }
     val present = scala.collection.mutable.LinkedHashMap[String, Boolean]()
@@ -900,7 +885,7 @@ final class ManagedTable(spark: SparkSession, val path: String)
     val dvB = spark.sparkContext.broadcast(dvCounts)
     val predsB = spark.sparkContext.broadcast(preds)
     val kept = try {
-      val raw = spark.read.parquet(ckpt.map(_.toString): _*)
+      val raw = spark.read.parquet(ckpt.toString)
       val cols = raw.columns.toSet
       def optCol(n: String, t: String) =
         if (cols(n)) col(n).cast(t) else lit(null).cast(t)
@@ -973,7 +958,7 @@ final class ManagedTable(spark: SparkSession, val path: String)
       val addRows = adds.map(p =>
         (p, addMeta.get(p).map(_._1).getOrElse(-1L)))
       val excludedB = spark.sparkContext.broadcast(excluded)
-      val raw = spark.read.parquet(ckpt.map(_.toString): _*)
+      val raw = spark.read.parquet(ckpt.toString)
       val lenCol =
         if (raw.columns.contains("len"))
           coalesce(col("len").cast("long"), lit(-1L))
@@ -1182,7 +1167,7 @@ final class ManagedTable(spark: SparkSession, val path: String)
     import spark.implicits._
     val removedB = spark.sparkContext.broadcast(excluded)
     val collected = try {
-      val raw = spark.read.parquet(ckpt.map(_.toString): _*)
+      val raw = spark.read.parquet(ckpt.toString)
       val cols = raw.columns.toSet
       if (!cols("rows")) return None // v1 checkpoint: rowsTotal unknowable
       def optCol(n: String, t: String) =
@@ -1309,7 +1294,7 @@ final class ManagedTable(spark: SparkSession, val path: String)
     import spark.implicits._
     val removedB = spark.sparkContext.broadcast(excluded)
     val (n, nr, s) = try {
-      val raw = spark.read.parquet(ckpt.map(_.toString): _*)
+      val raw = spark.read.parquet(ckpt.toString)
       if (!raw.columns.contains("rows")) return None
       val r = raw.select(col("path").cast("string"),
           col("rows").cast("long").as("rows"))
@@ -1406,7 +1391,7 @@ final class ManagedTable(spark: SparkSession, val path: String)
     val removedB = spark.sparkContext.broadcast(excluded)
     val dvB = spark.sparkContext.broadcast(dvCounts)
     val collected = try {
-      val raw = spark.read.parquet(ckpt.map(_.toString): _*)
+      val raw = spark.read.parquet(ckpt.toString)
       val cols = raw.columns.toSet
       if (!cols("rows") || !cols("len")) return None
       raw.select(col("path").cast("string"), col("len").cast("long"),
@@ -1762,9 +1747,6 @@ final class ManagedTable(spark: SparkSession, val path: String)
         throw e
     }
   }
-
-  def dropShingleBloomIndex(textCol: String, n: Int): Unit =
-    dropBloomIndex(shingleDeclName(physicalColName(textCol), n))
 
   /** Live data files that MIGHT contain any of `keys` (shingle hashes),
     * per the declared shingle index — (kept, all), [[filesOverlapping]]'s
@@ -2524,7 +2506,7 @@ final class ManagedTable(spark: SparkSession, val path: String)
   private def remapFiles(mapping: Map[String, String]): Unit = {
     if (!fs.exists(logDir) || mapping.isEmpty) return
     manifestsRemapped = true
-    (fs.listStatus(logDir) ++ retroPointerStatuses).filter { st =>
+    fs.listStatus(logDir).filter { st =>
       val n = st.getPath.getName
       st.isFile && n.startsWith("v") && n.endsWith(".json")
     }.foreach { st =>
@@ -2823,18 +2805,9 @@ final class ManagedTable(spark: SparkSession, val path: String)
     // dir or folds the sidecar base — O(churn) driver work. Symlink-
     // manifest tables stay on the listing path (their per-commit manifest
     // tree is O(live) by its own design); so does every checkpoint/
-    // boundary commit, which re-verifies against the dir — EXCEPT under
-    // `graft.manifest.asyncCheckpoint`, where a checkpoint-due commit
-    // also goes O(churn) and the checkpoint (plus the dir verification)
-    // runs as post-commit maintenance instead: Delta's actual shape,
-    // where every commit is a delta JSON and checkpoints trail
-    // asynchronously behind `_last_checkpoint`. The delta chain
-    // tolerates the lag by construction — reads fold the nearest
-    // checkpoint (manifest-embedded or retro) plus deltas.
-    val asyncCkpt =
-      properties.get("graft.manifest.asyncCheckpoint").contains("true")
+    // boundary commit, which writes the full file list below.
     if (churn.isDefined && filesExplicit.isEmpty && !manifestsRemapped &&
-        (v % ckptEvery != 0 || asyncCkpt) &&
+        v % ckptEvery != 0 &&
         operation != "BOOTSTRAP" && operation != "RECOVER" &&
         fs.exists(new Path(logDir, "_latest_files.txt")) &&
         !properties.get(symlinkAutoProp).contains("true")) {
@@ -2851,43 +2824,24 @@ final class ManagedTable(spark: SparkSession, val path: String)
         case Some(st) =>
           commitFromState(v, st, operation, partitionCols0, txn, dvNew,
             churn.get)
-          if (asyncCkpt && v % ckptEvery == 0) {
-            // WRITER feature, recorded under the lease BEFORE the first
-            // pointer can exist: a build unaware of `_checkpoints.d`
-            // could otherwise remap/move this table — rewriting
-            // manifests and sidecars but not the pointers — and leave
-            // stale retro paths a retro-aware reader trusts as recon(v).
-            // (The READER half is recorded only when cleanupLog anchors
-            // on a pointer — reads tolerate pointer-unawareness until
-            // then; writes don't.)
-            if (!protocol._2.contains("checkpoint-retro"))
-              ensureFeature("checkpoint-retro", reader = false)
-            CheckpointMaintenance.schedule(this)
-          }
           return
         case None => ()
       }
     }
     // filesExplicit: a shallow clone's founding commit records the SOURCE's
     // files — the live dir is empty by design and must not be listed.
-    // checkpointFromState (DEFAULT ON since r11 — Delta's exact trust
-    // model; `graft.manifest.checkpointFromState=false` restores the
-    // r10 listing behavior): a checkpoint-due commit with declared
-    // churn + trusted parent state assembles its full file list from
-    // state ± churn instead of listing — EVERY commit is then
-    // listing-free and the dir is verified only at BOOTSTRAP/RECOVER,
-    // fresh-handle checks, and (under asyncCheckpoint) the maintenance
-    // verification. On an object store a 1e7-file recursive listing is
-    // the checkpoint commit's long pole (10k+ LIST pages; ManifestBench
-    // CKPT-FROM-STATE A/B measures the local-fs delta); the trade is
-    // that out-of-band dir edits stay outside the log until a trust
-    // boundary instead of being absorbed by the next checkpoint's
-    // listing. Soaked by OccSpec (writers straddling a state-assembled
-    // checkpoint) and CommitFastPathSpec before the default flip.
+    // A checkpoint-due commit with declared churn + trusted parent state
+    // assembles its full file list from state ± churn instead of listing
+    // (Delta's trust model): EVERY commit is then listing-free and the
+    // dir is verified only at BOOTSTRAP/RECOVER and fresh-handle checks.
+    // On an object store a 1e7-file recursive listing would be the
+    // checkpoint commit's long pole (10k+ LIST pages); the trade is that
+    // out-of-band dir edits stay outside the log until a trust boundary
+    // instead of being absorbed by the next checkpoint's listing (OccSpec,
+    // CommitFastPathSpec).
     val stateFiles: Option[Seq[(String, Long)]] =
       if (churn.isEmpty || filesExplicit.isDefined || manifestsRemapped ||
-          operation == "BOOTSTRAP" || operation == "RECOVER" ||
-          properties.get("graft.manifest.checkpointFromState").contains("false"))
+          operation == "BOOTSTRAP" || operation == "RECOVER")
         None
       else CommitLiveCache.get(qualifiedRoot, v - 1).map { st =>
         val (added0, removed0) = churn.get
@@ -2981,17 +2935,9 @@ final class ManagedTable(spark: SparkSession, val path: String)
           fp -> metas.get(fp).map(m =>
             (len, m.rows, MetadataPlane.statsCells(m.stats)))
         }
-        val partSize = checkpointPartSize
-        if (partSize > 0 && entries.size > partSize) {
-          val names = writeCheckpointParquetParts(v, entries, partSize)
-          ensureFeature("checkpoint-parquet", reader = true)
-          ensureFeature("checkpoint-parquet-multipart", reader = true)
-          s""""filesParquetParts":[${names.map(jstr).mkString(",")}]"""
-        } else {
-          writeCheckpointParquet(ckptParquetPath(v), entries)
-          ensureFeature("checkpoint-parquet", reader = true)
-          s""""filesParquet":${jstr(ckptParquetPath(v).getName)}"""
-        }
+        writeCheckpointParquet(ckptParquetPath(v), entries)
+        ensureFeature("checkpoint-parquet", reader = true)
+        s""""filesParquet":${jstr(ckptParquetPath(v).getName)}"""
       }
       else if (isCheckpoint) s""""files":[${files.map(f => jstr(f._1)).mkString(",")}]"""
       else {
@@ -3025,11 +2971,6 @@ final class ManagedTable(spark: SparkSession, val path: String)
         files.map { case (p, len) => p -> (len, metas(p).rows) }.toMap,
         metas.values.map(_.rows).sum, files.map(_._2).sum))
       trustedDirVersion = v
-      // only a commit that actually LISTED the dir resolves a drift
-      // flag — a state-assembled checkpoint commit read no dir at all
-      // (under drift the state is invalidated, so this commit always
-      // listed; the guard is for the general case)
-      if (stateFiles.isEmpty) CommitLiveCache.clearDrift(qualifiedRoot)
     }
     // opt-in exception to the no-data-pass commit: declared bloom indexes
     // read the NEW files once (cost tracks the write, not the table)
@@ -3180,7 +3121,7 @@ final class ManagedTable(spark: SparkSession, val path: String)
     */
   val supportedReaderFeatures: Set[String] =
     Set("deletion-vectors", "shallow-clone", "row-tracking", "column-mapping",
-      "checkpoint-parquet", "checkpoint-parquet-multipart", "checkpoint-retro")
+      "checkpoint-parquet")
 
   /** Writer features THIS build honors on mutation — a writer lacking one
     * could commit while silently breaking invariants other clients rely
@@ -3345,24 +3286,6 @@ final class ManagedTable(spark: SparkSession, val path: String)
             (if (live.nonEmpty) s"${live.size} parquet checkpoint(s) remain " +
               "in the log — commit a JSON checkpoint (e.g. OPTIMIZE) and " +
               "cleanupLog past them first" else ""))
-      case "checkpoint-parquet-multipart" =>
-        // both part-name forms: the commit path's deterministic
-        // `vNNNNN.pKKK` AND retro maintenance's run-unique
-        // `vNNNNN.rRRRRRRRR.pKKK` — a drop while EITHER remains would
-        // hand an unaware reader a pointer it cannot resolve
-        val partRx = """^v\d+(\.r[0-9a-f]+)?\.p\d+\.checkpoint\.parquet$""".r
-        val liveParts = if (!fs.exists(logDir)) Nil
-          else fs.listStatus(logDir).map(_.getPath.getName)
-            .filter(n => partRx.matches(n)).toSeq
-        require(checkpointPartSize == 0 && liveParts.isEmpty,
-          s"cannot drop checkpoint-parquet-multipart on $path: " +
-            (if (checkpointPartSize > 0)
-              "graft.manifest.checkpointPartSize is still set — unset it, "
-            else "") +
-            (if (liveParts.nonEmpty) s"${liveParts.size} multi-part " +
-              "checkpoint sidecar(s) remain in the log — commit a " +
-              "single-file checkpoint (e.g. OPTIMIZE) and cleanupLog past " +
-              "them first" else ""))
       case "column-mapping" =>
         // the mapping DATA is the gate, not the mode flag: even with the
         // mode off, live files still carry physical names a feature-less
@@ -3631,10 +3554,7 @@ final class ManagedTable(spark: SparkSession, val path: String)
     // one sidecar layer but not the other would leave them inconsistent.
     // `_latest_files.txt` is rewritten wholesale by the commit that
     // immediately follows every move, so it needs no remap either.
-    // Retro pointers (async checkpoints) carry jstr paths exactly like
-    // manifests when the format is inline — sweep them with the same
-    // rewrite (their parquet sidecars ride remapCheckpointSidecars).
-    (fs.listStatus(logDir) ++ retroPointerStatuses).filter { st =>
+    fs.listStatus(logDir).filter { st =>
       val n = st.getPath.getName
       st.isFile && n.startsWith("v") && n.endsWith(".json")
     }.foreach { st =>
@@ -3659,9 +3579,8 @@ final class ManagedTable(spark: SparkSession, val path: String)
     remapCheckpointSidecars(rawRemap)
   }
 
-  /** Rewrite the path column of every parquet checkpoint sidecar (single
-    * AND multi-part — both share the `.checkpoint.parquet` suffix)
-    * through `f`. Checkpoint rows hold paths OUTSIDE the JSON text (raw
+  /** Rewrite the path column of every parquet checkpoint sidecar through
+    * `f`. Checkpoint rows hold paths OUTSIDE the JSON text (raw
     * strings), so BOTH remap flavors — the prefix remap
     * ([[remapManifests]], dir swaps) and the exact-path remap
     * ([[remapFiles]], file-granular retirement) — must rewrite them too,
@@ -3869,71 +3788,6 @@ final class ManagedTable(spark: SparkSession, val path: String)
   private def ckptParquetPath(v: Long) =
     new Path(logDir, f"v$v%05d.checkpoint.parquet")
 
-  /** Entries per parquet-checkpoint part; 0 (default) keeps the single
-    * sidecar. A positive value splits checkpoints larger than it into
-    * `vNNNNN.pKKK.checkpoint.parquet` parts written in PARALLEL —
-    * Delta's multi-part (v2) checkpoints: at 1e7+ entries one
-    * driver-threaded parquet write is the commit's long pole, and the
-    * distributed planner wants a multi-file scan anyway so each executor
-    * reads its own part. Part files share the `.checkpoint.parquet`
-    * suffix so the remap/retention/reap sweeps cover them unchanged.
-    * Gated by the `checkpoint-parquet-multipart` READER feature: an
-    * unaware build would misread the parts pointer as an empty delta.
-    */
-  private def checkpointPartSize: Int =
-    properties.get("graft.manifest.checkpointPartSize")
-      .flatMap(_.toIntOption).filter(_ > 0).getOrElse(0)
-
-  private def ckptPartPath(v: Long, i: Int) =
-    new Path(logDir, f"v$v%05d.p$i%03d.checkpoint.parquet")
-
-  /** RETRO-maintenance parts stage under RUN-unique names
-    * (`vNNNNN.rRRRRRRRR.pKKK.checkpoint.parquet`): maintenance is
-    * lease-free, so two runs — or two VENUES, whose row→part assignment
-    * differs (the driver stream splits the sorted row stream sequentially
-    * by partSize; the Spark job hash-partitions by path) — can assemble
-    * the same version concurrently. Renaming onto shared final names let
-    * a cross-venue race leave a MIXED-layout part set under an
-    * already-published pointer (rows duplicated/missing at read, and row
-    * counts are only verified pre-publish). With run-unique names the
-    * pointer — its own atomic publish, naming exactly the parts its run
-    * staged — is the only switch; a losing run's parts are unreferenced
-    * debris. The `vNNNNN` prefix is load-bearing: it keeps every
-    * version-keyed sweep (cleanupLog's below-horizon listing, remap,
-    * drop-feature) covering these files unchanged. The commit-path
-    * writer ([[writeCheckpointParquetParts]]) keeps deterministic names:
-    * it runs under the commit lease, where no concurrent writer exists.
-    */
-  private def retroPartPath(v: Long, runId: String, i: Int) =
-    new Path(logDir, f"v$v%05d.r$runId.p$i%03d.checkpoint.parquet")
-
-  private def newRetroRunId(): String =
-    java.util.UUID.randomUUID().toString.replace("-", "").take(8)
-
-  /** Write one checkpoint as `ceil(n/partSize)` parts concurrently;
-    * returns the part file names in row order. Each part is its own
-    * atomic tmp→rename publish: a crash leaves tmps (reaped under the
-    * commit lock) or unreferenced parts (invisible to readers until the
-    * pointer manifest lands, then swept by retention).
-    */
-  private[table] def writeCheckpointParquetParts(v: Long,
-      files: Seq[(String, Option[(Long, Long, String)])],
-      partSize: Int): Seq[String] = {
-    val parts = files.grouped(partSize).toSeq
-    val names = parts.indices.map(i => ckptPartPath(v, i))
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(parts.size, 8))
-    try {
-      val futs = parts.zip(names).map { case (chunk, p) =>
-        pool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = writeCheckpointParquet(p, chunk)
-        })
-      }
-      futs.foreach(_.get())
-    } finally pool.shutdown()
-    names.map(_.getName)
-  }
-
   // v2 checkpoint row: path + (when the commit knew it) the file's
   // sidecar metadata — Delta's add.stats shape. The metadata columns are
   // OPTIONAL so v1 path-only checkpoints keep reading; a row without them
@@ -3985,10 +3839,8 @@ final class ManagedTable(spark: SparkSession, val path: String)
     if (fs.exists(p)) fs.delete(p, false)
     if (!fs.rename(tmp, p)) {
       fs.delete(tmp, false)
-      // racing writers of the SAME checkpoint (e.g. two maintenance runs)
-      // stage byte-identical content — content is deterministic in
-      // (version, state) — so losing the delete→rename window to a racer
-      // that already published is success, not failure
+      // checkpoint content is deterministic in (version, state), so a
+      // rename lost to a writer that already published it is success
       if (!fs.exists(p))
         throw new java.io.IOException(s"failed to publish checkpoint $p")
     }
@@ -4035,718 +3887,29 @@ final class ManagedTable(spark: SparkSession, val path: String)
     out.toSeq
   }
 
-  // ---- retro (async) checkpoints ---------------------------------------
-  //
-  // `graft.manifest.asyncCheckpoint = true` moves the checkpoint OFF the
-  // commit path: a checkpoint-due commit writes its ordinary O(churn)
-  // delta manifest and post-commit maintenance later publishes a RETRO
-  // checkpoint — a pointer under `_checkpoints.d/vNNNNN.json` carrying
-  // exactly the keys a checkpoint manifest would (`files` /
-  // `filesParquet` / `filesParquetParts`), with the parquet sidecars
-  // under version-prefixed `vNNNNN[.rRRRRRRRR][.pKKK].checkpoint.parquet`
-  // names (multi-part retro sidecars carry a run-unique `rRRRRRRRR`
-  // segment — see [[retroPartPath]]) so every existing
-  // remap/retention/reap sweep covers them unchanged. Delta's
-  // design (async checkpoints trailing `_last_checkpoint`): the log
-  // tolerates a lagging checkpoint by construction — reconstruction
-  // walks back to the NEAREST base, retro or manifest-embedded — so a
-  // crash before maintenance lands costs nothing but a longer walk, and
-  // the next maintenance run (any process) publishes it.
-  //
-  // Retro checkpoints are a pure CACHE of recon(v): builds that predate
-  // them reconstruct identically from the manifest chain. The one place
-  // that changes is [[cleanupLog]]: once a horizon ANCHORS on a retro
-  // checkpoint (deleting the manifests below it), an unaware build could
-  // no longer reconstruct — so that path, and only that path, records
-  // the `checkpoint-retro` reader feature.
-
-  private def retroDir = new Path(logDir, "_checkpoints.d")
-  private[table] def retroPtrPath(v: Long) = new Path(retroDir, f"v$v%05d.json")
-
-  /** Hardened copy of an ANCHOR-load-bearing retro pointer, written by
-    * [[cleanupLog]] under the commit lock BEFORE it deletes the manifests
-    * below its horizon, and never touched by the lease-free retraction in
-    * [[publishRetroPointer]]. This removes the one crash window the
-    * retract-then-verify protocol cannot close on its own: a maintenance
-    * process killed between its pointer delete and its restore, while a
-    * cleanup had already anchored on that pointer — reconstruction then
-    * falls through to this copy instead of walking into deleted manifests.
-    */
-  private def retroAnchorPath(v: Long) =
-    new Path(retroDir, f"v$v%05d.anchor.json")
-
-  /** Re-verify marker: written by [[publishRetroPointer]] when its
-    * bounded outcome-wait expires with the mutation STILL holding the
-    * lease — the "kept" verdict is then provisional (the slow mutation
-    * may yet commit a remap whose sweep listed before our publish), and
-    * without a marker the `already` probe would treat the pointer as
-    * settled forever (advice r13). The next maintenance run renders the
-    * real verdict via [[resolveRetroReverify]] once the lease is free.
-    */
-  private def retroReverifyPath(v: Long) =
-    new Path(retroDir, f"v$v%05d.reverify")
-
-  /** Every retro pointer's FileStatus — the remap sweeps fold these in
-    * with the manifest listing so moved tables keep reconstructing.
-    */
-  private def retroPointerStatuses: Seq[org.apache.hadoop.fs.FileStatus] =
-    if (!fs.exists(retroDir)) Nil
-    else fs.listStatus(retroDir).toSeq
-
-  /** The retro pointer text for version `v` — the pointer itself, or the
-    * hardened anchor copy ([[retroAnchorPath]]) when the pointer is gone
-    * (retraction flicker, or the retract-crash the copy exists for);
-    * None when neither is present/readable.
-    */
-  private def retroText(v: Long): Option[String] = {
-    val p = retroPtrPath(v)
-    (if (!fs.exists(p)) None
-     else scala.util.Try(readTextFully(p)).toOption)
-      .orElse {
-        val a = retroAnchorPath(v)
-        if (!fs.exists(a)) None
-        else scala.util.Try(readTextFully(a)).toOption
-      }
-  }
-
-  /** Version `v`'s file list from its retro checkpoint, when one exists
-    * AND resolves (a dangling pointer — sidecar reaped or torn — reads
-    * as absent: the walk then uses the manifest chain, which is always
-    * sufficient).
-    */
-  private def retroFiles(v: Long): Option[Seq[String]] =
-    retroText(v).flatMap(rt =>
-      scala.util.Try(checkpointFilesOf(rt)).toOption.flatten)
-
-  /** Streaming row iterator over checkpoint sidecars — the incremental
-    * retro assembly reads the PREVIOUS checkpoint through this with O(1)
-    * driver memory per row (1e7 rows must never materialize as a Seq on
-    * the maintenance thread). Each file's reader closes when exhausted;
-    * an abandoned iterator leaks one open reader until GC, which only
-    * the count-mismatch fallback path can produce (and it drains first).
+  /** Streaming row iterator over a checkpoint sidecar — [[seedStateFromLog]]
+    * reads the base checkpoint through this with O(1) driver memory per
+    * row. The reader closes when exhausted.
     */
   private def checkpointRowIter(
-      ps: Seq[Path]): Iterator[(String, Option[(Long, Long, String)])] =
-    ps.iterator.flatMap { p =>
-      new Iterator[(String, Option[(Long, Long, String)])] {
-        private val r = openCheckpointReader(p)
-        private var nextG = r.read()
-        private var closed = false
-        private def closeOnce(): Unit =
-          if (!closed) { closed = true; r.close() }
-        override def hasNext: Boolean = {
-          if (nextG == null) closeOnce()
-          nextG != null
-        }
-        override def next(): (String, Option[(Long, Long, String)]) = {
-          val g = nextG
-          nextG = r.read()
-          if (nextG == null) closeOnce()
-          checkpointRow(g)
-        }
+      p: Path): Iterator[(String, Option[(Long, Long, String)])] =
+    new Iterator[(String, Option[(Long, Long, String)])] {
+      private val r = openCheckpointReader(p)
+      private var nextG = r.read()
+      private var closed = false
+      private def closeOnce(): Unit =
+        if (!closed) { closed = true; r.close() }
+      override def hasNext: Boolean = {
+        if (nextG == null) closeOnce()
+        nextG != null
+      }
+      override def next(): (String, Option[(Long, Long, String)]) = {
+        val g = nextG
+        nextG = r.read()
+        if (nextG == null) closeOnce()
+        checkpointRow(g)
       }
     }
-
-  /** Nearest version ≤ `from` whose checkpoint exists as PARQUET sidecars
-    * (retro or manifest-embedded) that are all present on disk — the
-    * incremental assembly's base. Walks manifests like [[manifestFiles]]
-    * but reads no sidecar content.
-    */
-  private def nearestParquetCheckpoint(from: Long): Option[(Long, Seq[Path])] = {
-    var i = from
-    while (i >= 0) {
-      val names = retroText(i).flatMap(checkpointSidecarsOf)
-        .orElse(scala.util.Try(checkpointSidecarsOf(manifestText(i))).toOption.flatten)
-      names match {
-        case Some(ns) =>
-          val ps = ns.map(n => new Path(logDir, n))
-          if (ps.forall(fs.exists)) return Some((i, ps))
-        case None => ()
-      }
-      // an inline-JSON checkpoint manifest ends the walk too — there is
-      // no parquet base at or below it worth folding MORE deltas over
-      if (scala.util.Try(jsonStringArray(manifestText(i), "files").isDefined)
-          .getOrElse(false)) return None
-      i -= 1
-    }
-    None
-  }
-
-  /** Assemble version `v`'s full checkpoint rows INCREMENTALLY: the
-    * nearest parquet checkpoint's rows stream through live-filtered
-    * (path still in `st`, length unchanged, not delta-touched since) and
-    * the files added since serve from the per-commit sidecar segments
-    * (recovering post-compaction adds by stream-filtering the base) —
-    * O(churn) driver memory on top of the state map the caller already
-    * holds, never a sidecar-base parse. This is Delta's incremental
-    * checkpointing shape: new checkpoint = old checkpoint ± churn.
-    *
-    * Returns None when no parquet base exists (first checkpoint, or
-    * inline-JSON format) — the caller then streams the sidecar instead.
-    * The iterator's row count must be verified against `st.files.size`
-    * by the consumer (a concurrent compaction can race the stream); the
-    * write path does exactly that and falls back on mismatch.
-    */
-  private def incrementalCheckpointRows(v: Long, st: CommitLiveCache.State)
-      : Option[Iterator[(String, Option[(Long, Long, String)])]] = {
-    val (parts, addsLive, excluded) = retroBaseAndChurn(v, st)
-      .getOrElse(return None)
-    val addRows = retroAddRows(st, addsLive)
-    val baseRows = checkpointRowIter(parts).filter { case (p, meta) =>
-      !excluded.contains(p) && (meta match {
-        case Some((len, _, _)) => st.files.get(p).exists(_._1 == len)
-        case None => st.files.contains(p) // v1 path-only row: keep if live
-      })
-    }
-    Some(baseRows ++ addRows)
-  }
-
-  /** The incremental retro assembly's shared front half: the nearest
-    * parquet base's parts plus the net churn in (base, v] — live adds to
-    * serve from current sidecar metadata and the full delta-touched path
-    * set to EXCLUDE from the base (same discipline as distributedBase —
-    * a re-added path must serve from its current sidecar metadata, not
-    * stale checkpoint rows). None when no parquet base exists (first
-    * checkpoint, or inline-JSON format) or the chain shape breaks the
-    * caller's fast-path-delta contract.
-    */
-  private def retroBaseAndChurn(v: Long, st: CommitLiveCache.State)
-      : Option[(Seq[Path], Seq[String], Set[String])] = {
-    val (pv, parts) = nearestParquetCheckpoint(v - 1).getOrElse(return None)
-    val touched = scala.collection.mutable.LinkedHashMap[String, Boolean]()
-    var i = pv + 1
-    while (i <= v) {
-      val txt = manifestText(i)
-      // no i in (pv, v] can be a checkpoint manifest: a parquet one would
-      // have been the nearest base and an inline one aborts the base walk
-      // (and v itself is a fast-path delta by the caller's contract) —
-      // bail to the sidecar stream rather than fold wrong if that
-      // invariant is ever broken
-      if (jsonStringArray(txt, "files").isDefined ||
-          checkpointSidecarsOf(txt).isDefined) return None
-      jsonStringArray(txt, "add").getOrElse(Nil).foreach(touched(_) = true)
-      jsonStringArray(txt, "remove").getOrElse(Nil).foreach(touched(_) = false)
-      i += 1
-    }
-    val addsLive = touched.collect {
-      case (p, true) if st.files.contains(p) => p }.toSeq
-    Some((parts, addsLive, touched.keySet.toSet))
-  }
-
-  /** Checkpoint rows for the files added since the base — stats from the
-    * per-commit sidecar segments (footer re-read on a raced length), an
-    * O(churn) iterator.
-    */
-  private def retroAddRows(st: CommitLiveCache.State, addsLive: Seq[String])
-      : Iterator[(String, Option[(Long, Long, String)])] = {
-    val addMeta = addsMeta(addsLive) // segments + base-filtered recovery
-    val nc = statsColsNow
-    addsLive.iterator.map { p =>
-      val (len, _) = st.files(p)
-      val m = addMeta.get(p).collect { case (l, fm) if l == len => fm }
-        .getOrElse(footerMeta(new Path(p), nc))
-      (p, Some((len, m.rows, MetadataPlane.statsCells(m.stats))))
-    }
-  }
-
-  /** Checkpoint rows for `v` streamed from the stats sidecar (base +
-    * segments) when no parquet base exists: segments fold small (recent
-    * churn), the base streams line-by-line — O(segments + 1 row) driver
-    * memory beyond the state map. Every live file has an entry by
-    * construction; the consumer count-verifies like the incremental path.
-    */
-  private def sidecarCheckpointRows(st: CommitLiveCache.State)
-      : Iterator[(String, Option[(Long, Long, String)])] = {
-    val segMap = sidecarSegments
-      .foldLeft(Map.empty[String, (Long, FileMeta)])(
-        (m, s) => m ++ readSidecarFile(s))
-    def row(p: String, len: Long, m: FileMeta) =
-      (p, Some((len, m.rows, MetadataPlane.statsCells(m.stats))))
-    val baseIter: Iterator[(String, Option[(Long, Long, String)])] =
-      if (!fs.exists(sidecarBase)) Iterator.empty
-      else {
-        val in = fs.open(sidecarBase)
-        var closed = false
-        def closeOnce(): Unit = if (!closed) { closed = true; in.close() }
-        val lines = scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        new Iterator[(String, Option[(Long, Long, String)])] {
-          private var nextRow: (String, Option[(Long, Long, String)]) = advance()
-          @annotation.tailrec private def advance()
-              : (String, Option[(Long, Long, String)]) = {
-            if (!lines.hasNext) { closeOnce(); null }
-            else MetadataPlane.parseLine(lines.next()) match {
-              case Some(e) if !segMap.contains(e.path) &&
-                  st.files.get(e.path).exists(_._1 == e.len) =>
-                row(e.path, e.len, FileMeta(e.rows, e.stats))
-              case _ => advance()
-            }
-          }
-          override def hasNext: Boolean = nextRow != null
-          override def next(): (String, Option[(Long, Long, String)]) = {
-            val r = nextRow; nextRow = advance(); r
-          }
-        }
-      }
-    val segIter = segMap.iterator.collect {
-      case (p, (len, m)) if st.files.get(p).exists(_._1 == len) =>
-        row(p, len, m)
-    }
-    baseIter ++ segIter
-  }
-
-  /** Write `rows` as version `v`'s checkpoint sidecars in the table's
-    * configured format, streaming (sequential parts of `partSize`, each
-    * an atomic publish); returns (the pointer's file-entry JSON, rows
-    * written). Inline-JSON format callers never get here — they build
-    * the entry from the state directly.
-    */
-  private def writeRetroSidecars(v: Long,
-      rows: Iterator[(String, Option[(Long, Long, String)])]): (String, Long) = {
-    val partSize = checkpointPartSize
-    if (partSize > 0) {
-      // run-unique part names (see [[retroPartPath]]): a racing run or the
-      // other venue stages disjoint files; only the pointer publish decides
-      val runId = newRetroRunId()
-      val names = scala.collection.mutable.ArrayBuffer[String]()
-      var total = 0L
-      val grouped = rows.grouped(partSize)
-      while (grouped.hasNext) {
-        val chunk = grouped.next()
-        val p = retroPartPath(v, runId, names.size)
-        writeCheckpointParquet(p, chunk)
-        names += p.getName
-        total += chunk.size
-      }
-      if (names.isEmpty) { // empty table still needs a valid pointer
-        val p = retroPartPath(v, runId, 0)
-        writeCheckpointParquet(p, Nil)
-        names += p.getName
-      }
-      (s""""filesParquetParts":[${names.map(jstr).mkString(",")}]""", total)
-    } else {
-      var total = 0L
-      val counted = rows.map { r => total += 1; r }
-      writeCheckpointParquetIter(ckptParquetPath(v), counted)
-      (s""""filesParquet":${jstr(ckptParquetPath(v).getName)}""", total)
-    }
-  }
-
-  /** Assemble and stage version `v`'s checkpoint as a SPARK JOB — Delta's
-    * actual checkpoint discipline (the checkpoint is written by a job
-    * over the state DataFrame, never a driver loop): the previous parquet
-    * checkpoint's parts scan on executors, the delta-touched path set
-    * broadcasts (O(churn)), the O(churn) add rows union in from the
-    * driver, and the result hash-repartitions on `path` into
-    * `ceil(live/partSize)` parts. Content is DETERMINISTIC in
-    * (version, state) — fixed partition count, hash-by-path assignment,
-    * sort-within-partition — so racing maintenance runs (which hold the
-    * same state for the same version) stage byte-identical parts and the
-    * delete+rename publish stays safe, exactly the driver path's
-    * contract. Rows are count-verified against the state BEFORE any part
-    * publishes (footer record counts, O(parts) driver reads); a mismatch
-    * (raced compaction, base reaped mid-job) abandons the staging dir and
-    * the caller falls back to the always-correct driver stream. At 1e7
-    * live files this moves the ~30 s single-threaded assembly onto the
-    * cluster; the driver holds only churn + part names.
-    *
-    * None (fall back) when: single-sidecar format (partSize == 0 — the
-    * ≤1e6 regime where the driver stream wins), no parquet base, count
-    * mismatch, or any job failure (e.g. a concurrent vacuum reaping the
-    * staging dir — self-healing: the next maintenance run retries).
-    */
-  private def retroSidecarsDistributed(v: Long, st: CommitLiveCache.State)
-      : Option[(String, Long)] = {
-    val partSize = checkpointPartSize
-    if (partSize <= 0 || st.files.isEmpty) return None
-    val (parts, addsLive, excluded) = retroBaseAndChurn(v, st)
-      .getOrElse(return None)
-    val addRows = retroAddRows(st, addsLive).map { case (p, meta) =>
-      (p, meta.map(_._1), meta.map(_._2),
-        meta.map(_._3).filter(_.nonEmpty))
-    }.toSeq
-    val k = math.max(1L, (st.files.size + partSize - 1L) / partSize).toInt
-    import spark.implicits._
-    val exB = spark.sparkContext.broadcast(excluded)
-    // table-sibling staging dir (the staged-write convention): a crashed
-    // run's debris is a `<table>.tmp-*` dir, reaped by vacuum()
-    val tmpOut = new Path(path + ".tmp-retro-" +
-      java.util.UUID.randomUUID().toString.take(8))
-    try {
-      val raw = spark.read.parquet(parts.map(_.toString): _*)
-      val cs = raw.columns.toSet
-      def optCol(n: String, t: String) =
-        if (cs(n)) col(n).cast(t) else lit(null).cast(t)
-      // base rows pass through untouched unless delta-touched; liveness
-      // beyond the exclusion set (the driver stream's per-row state
-      // lookup) is enforced by the count verification below — the state
-      // IS the log's reconstruction, so base − touched + adds either
-      // matches it exactly or a race happened and we fall back
-      val base = raw.select(col("path").cast("string").as("path"),
-          optCol("len", "long").as("len"), optCol("rows", "long").as("rows"),
-          optCol("stats", "string").as("stats"))
-        .as[(String, Option[Long], Option[Long], Option[String])]
-        .filter(r => !exB.value.contains(r._1))
-      base.union(addRows.toDS())
-        .toDF("path", "len", "rows", "stats")
-        .repartition(k, col("path")).sortWithinPartitions("path")
-        .write.option("compression", "snappy").parquet(tmpOut.toString)
-      val staged = fs.listStatus(tmpOut).map(_.getPath)
-        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName).toSeq
-      val conf = new org.apache.hadoop.conf.Configuration(
-        spark.sparkContext.hadoopConfiguration)
-      val total = staged.map { p =>
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
-        try r.getRecordCount finally r.close()
-      }.sum
-      if (total != st.files.size) {
-        logWarning(s"distributed checkpoint maintenance on $path: job " +
-          s"produced $total rows for ${st.files.size} live files — " +
-          "abandoned (raced); falling back to the driver stream")
-        return None
-      }
-      // run-unique part names (see [[retroPartPath]]): nothing to adopt or
-      // overwrite — a racing run (either venue) stages disjoint files, so
-      // no reader of an already-published pointer can ever observe a
-      // mixed-layout part set. A rename failure here is a real error, not
-      // a lost race.
-      val runId = newRetroRunId()
-      val names = staged.zipWithIndex.map { case (src, i) =>
-        val dst = retroPartPath(v, runId, i)
-        if (!fs.rename(src, dst))
-          throw new java.io.IOException(s"failed to stage $dst")
-        dst.getName
-      }
-      Some((s""""filesParquetParts":[${names.map(jstr).mkString(",")}]""",
-        total))
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        logWarning(s"distributed checkpoint maintenance on $path failed " +
-          s"(${e.getMessage}) — falling back to the driver stream")
-        None
-    } finally {
-      exB.destroy()
-      if (fs.exists(tmpOut)) fs.delete(tmpOut, true)
-    }
-  }
-
-  /** Publish the retro checkpoint for the latest version whose state this
-    * process holds, then (opportunistically, lease permitting) verify the
-    * live dir against it — the post-commit maintenance behind
-    * `graft.manifest.asyncCheckpoint`, normally run on the
-    * [[CheckpointMaintenance]] thread but callable directly (tests, an
-    * operator's catch-up after a crash). Idempotent and safe to race:
-    * sidecar writes are atomic per part with content deterministic in
-    * (version, state), and the pointer publishes under a short lease
-    * window that re-checks the version — a remap/commit that lands first
-    * simply voids this attempt (the next maintenance re-runs).
-    */
-  /** Which venue the last maintenance run on THIS handle assembled its
-    * retro checkpoint through — a test seam ("distributed" | "driver" |
-    * "inline" | "" when skipped); specs pin the venue because both
-    * produce identical artifacts by design.
-    *
-    * Seam audit: WRITE-ONLY in production code — nothing under src/main
-    * reads this field (grep-verified), so it cannot steer behavior; its
-    * only readers are specs. The same holds for
-    * [[lastFunnelOverReport]] (read once, for a warn log). The one
-    * behavior-affecting test hook in this layer is
-    * [[CheckpointMaintenance.suspended]], whose only production access
-    * is the read in `schedule` — no src/main code ever WRITES it, so in
-    * production it is constant-false.
-    */
-  @volatile private[table] var lastRetroVenue: String = ""
-
-  private[table] def runCheckpointMaintenance(): Unit = {
-    val st = CommitLiveCache.getAny(qualifiedRoot).getOrElse {
-      logInfo(s"checkpoint maintenance on $path: no cached state (evicted " +
-        "or never seeded) — skipping; the next listing-path commit checkpoints")
-      return
-    }
-    val v = st.version
-    // deferred verdicts first: a pointer kept provisionally under a
-    // still-held lease must be re-adjudicated BEFORE the `already` probe
-    // can settle it (advice r13)
-    scala.util.Try(resolveRetroReverify(v))
-    // "already checkpointed" counts a sidecar-format manifest only when
-    // its sidecars actually EXIST — a dangling checkpoint (remap-crash
-    // debris) must not suppress the publish: the retro pointer this run
-    // lands is then the artifact that REPAIRS reconstruction at v
-    val already = fs.exists(retroPtrPath(v)) ||
-      scala.util.Try { val txt = manifestText(v)
-        jsonStringArray(txt, "files").isDefined ||
-          checkpointSidecarsOf(txt).exists(ns =>
-            ns.forall(n => fs.exists(new Path(logDir, n)))) }.getOrElse(false)
-    if (!already) {
-      if (checkpointFormatParquet) {
-        // above the planning cutover the assembly runs as a Spark job
-        // (Delta's checkpoint-from-state-DataFrame); the driver stream
-        // serves the small regime and every fallback
-        val distributed =
-          if (useDistributedPlanning) retroSidecarsDistributed(v, st)
-          else None
-        distributed match {
-          case Some((entry, _)) =>
-            lastRetroVenue = "distributed"
-            publishRetroPointer(v, entry)
-            maybeVerifyDirInMaintenance()
-            return
-          case None => ()
-        }
-        lastRetroVenue = "driver"
-        val rows = incrementalCheckpointRows(v, st)
-          .getOrElse(sidecarCheckpointRows(st))
-        val (entry, n) = writeRetroSidecars(v, rows)
-        val finalEntry =
-          if (n == st.files.size) entry
-          else {
-            // a concurrent compaction/cleanup raced the stream: rebuild
-            // from the always-correct materialized fold (rare, bounded)
-            logWarning(s"checkpoint maintenance on $path: streamed $n rows " +
-              s"for ${st.files.size} live files — rebuilding from fileMeta")
-            val files = st.files.toSeq.map { case (p, (len, _)) => (p, len) }
-            val metas = fileMeta(files)
-            writeRetroSidecars(v, files.iterator.map { case (p, len) =>
-              (p, Some((len, metas(p).rows,
-                MetadataPlane.statsCells(metas(p).stats))))
-            })._1
-          }
-        publishRetroPointer(v, finalEntry)
-      } else {
-        // inline-JSON checkpoint format: the pointer carries the file
-        // list itself (the ≤1e6-file regime; no sidecar to stream)
-        lastRetroVenue = "inline"
-        publishRetroPointer(v,
-          s""""files":[${st.files.keys.toSeq.sorted.map(jstr).mkString(",")}]""")
-      }
-    }
-    maybeVerifyDirInMaintenance()
-  }
-
-  /** `graft.manifest.verifyDirInMaintenance = false` opts out of the
-    * dir listing entirely — Delta's pure trust model (log is truth,
-    * out-of-band edits surface only at a fresh handle's consistency
-    * check), the right trade on object stores where a 1e7-file
-    * recursive listing is 10k+ LIST pages per maintenance run.
-    */
-  private def maybeVerifyDirInMaintenance(): Unit =
-    if (!properties.get("graft.manifest.verifyDirInMaintenance")
-        .contains("false"))
-      verifyDirOpportunistic()
-
-  /** Publish the retro pointer WITHOUT ever touching the commit lease —
-    * maintenance must never make a fail-fast foreground writer error out
-    * just because a background pointer rename was in flight. Safety
-    * against the one mutation class that could invalidate the pointer's
-    * content (remaps, which rewrite historical checkpoint paths and
-    * always commit a version): publish, then retract if a mutation
-    * overlapped. Either the remap's sweep started after our pointer
-    * landed (the sweep rewrites it like any checkpoint artifact), or the
-    * post-publish check sees the held lease / moved version and deletes
-    * the pointer — it is a pure cache, so retraction costs only the next
-    * maintenance run. Orphan sidecars from an abandoned publish are
-    * reaped by retention.
-    */
-  private def publishRetroPointer(v: Long, fileEntry: String): Unit = {
-    if (version != v) {
-      logInfo(s"checkpoint maintenance on $path: version moved past $v " +
-        "before publish — abandoned (next maintenance covers it)")
-      return
-    }
-    writeAtomic(retroPtrPath(v), s"""{"version":$v,$fileEntry}""")
-    if (!fs.exists(lockFile) && version == v) return // clean publish
-    // A mutation overlapped the publish. The pointer is a pure cache, so
-    // the default verdict is RETRACT (the next maintenance re-runs) — a
-    // kept pointer that a remap's sweep listed-past would resolve v to
-    // pre-remap paths forever. The one pointer the log can't lose is an
-    // ANCHOR: a cleanup may have set its horizon AT v on this pointer and
-    // deleted every manifest below, with v's own manifest a delta —
-    // retraction is then safe only if something else serves recon(v).
-    // Taking the commit lock here is NOT an option (maintenance must
-    // never make a fail-fast foreground writer error out — the
-    // config-matrix soak caught exactly that), and no restore loop is
-    // needed either: cleanupLog captures the pointer text at its anchor
-    // probe and HARDENS it into [[retroAnchorPath]] (a name this path
-    // never touches) before any deletion, so a retraction racing the
-    // anchoring still leaves recon(v) a path through the copy.
-    // v's manifest "self-anchors" only when it can actually SERVE
-    // recon(v): inline files, or sidecar names that all still exist —
-    // the same conservatism as manifestAnchors/copyServes (a dangling
-    // pointer manifest must keep the retro pointer load-bearing, else
-    // retraction here orphans the only resolvable checkpoint at v)
-    def retract(why: String): Unit = {
-      fs.delete(retroPtrPath(v), false)
-      logInfo(s"checkpoint maintenance on $path: a mutation overlapped " +
-        s"the v$v pointer publish — retracted ($why; next maintenance " +
-        "re-runs)")
-    }
-    if (!pointerAnchorsHorizon(v)) { retract("not anchor-load-bearing"); return }
-    // Anchor-load-bearing. The overlap's OUTCOME decides: wait briefly
-    // for the in-flight mutation to release the lease, so the verdict is
-    // based on what it did, not on its presence. (Rare² path: anchored
-    // pointer × concurrent mutation; the wait blocks only the async
-    // maintenance thread.)
-    var slept = 0L
-    var step = 25L
-    while (fs.exists(lockFile) && version == v && slept < 10000L) {
-      Thread.sleep(step); slept += step; step = math.min(step * 2, 800L)
-    }
-    if (version == v) {
-      if (fs.exists(lockFile))
-        // the wait EXPIRED with the mutation still holding the lease: the
-        // "kept" verdict would be provisional — a slow remap that listed
-        // retroDir before this publish may yet commit, leaving pre-remap
-        // paths in a pointer the `already` probe then settles forever
-        // (advice r13). Record a re-verify marker so the next maintenance
-        // run adjudicates from the mutation's actual OUTCOME, and say so
-        // at WARN, not the kept-INFO.
-        scala.util.Try {
-          writeAtomic(retroReverifyPath(v), s"""{"version":$v}""")
-          logWarning(s"checkpoint maintenance on $path: the v$v pointer " +
-            "anchors the log horizon and a mutation still held the lease " +
-            "when the outcome-wait expired — kept PROVISIONALLY; re-verify " +
-            "marker recorded for the next maintenance run")
-        }
-      else
-        // no commit landed (a cleanup — which never moves the version — or
-        // an aborted mutation): the content in the pointer is exactly
-        // recon(v), still valid. Keep it.
-        logInfo(s"checkpoint maintenance on $path: a mutation overlapped " +
-          s"the v$v pointer publish but the pointer anchors the log " +
-          "horizon and the version held — kept")
-    } else
-      adjudicateOverlappedPointer(v)
-  }
-
-  /** Does the v-pointer anchor the log horizon? True when the manifest
-    * below v is gone (a cleanup set its horizon AT v) and v's own
-    * manifest cannot serve recon(v) itself — inline files, or sidecars
-    * that all still exist (the same conservatism as
-    * manifestAnchors/copyServes: a dangling manifest must keep the retro
-    * pointer load-bearing).
-    */
-  private def pointerAnchorsHorizon(v: Long): Boolean = v > 0 &&
-    !fs.exists(new Path(logDir, f"v${v - 1}%05d.json")) &&
-    !scala.util.Try { val txt = manifestText(v)
-      jsonStringArray(txt, "files").isDefined ||
-        checkpointSidecarsOf(txt).exists(ns =>
-          ns.forall(n => fs.exists(new Path(logDir, n)))) }.getOrElse(false)
-
-  /** Verdict for a pointer whose publish a since-COMMITTED mutation
-    * overlapped — possibly a remap, whose retroDir sweep may have listed
-    * BEFORE the publish and so never rewrote this pointer's paths
-    * (ADVICE r12: the kept-stale-pointer hazard). Retract when the
-    * hardened anchor copy can serve recon(v): the copy predates the
-    * mutation, so any remap sweep rewrote it.
-    */
-  private def adjudicateOverlappedPointer(v: Long): Unit = {
-    val copyServes = scala.util.Try {
-      val a = retroAnchorPath(v)
-      fs.exists(a) && {
-        val txt = readTextFully(a)
-        jsonStringArray(txt, "files").isDefined ||
-          checkpointSidecarsOf(txt).exists(ns =>
-            ns.forall(n => fs.exists(new Path(logDir, n))))
-      }
-    }.getOrElse(false)
-    if (copyServes) {
-      fs.delete(retroPtrPath(v), false)
-      logInfo(s"checkpoint maintenance on $path: a mutation overlapped " +
-        s"the v$v pointer publish — retracted (anchor copy serves " +
-        "reconstruction; next maintenance re-runs)")
-    } else
-      // unreachable when every anchoring cleanup hardened first (all
-      // do since the copy landed); kept as the stale-beats-broken
-      // last resort for logs anchored before the copy existed
-      logWarning(s"checkpoint maintenance on $path: v$v pointer anchors " +
-        "the horizon, a commit overlapped its publish, and no hardened " +
-        "anchor copy exists — kept (content may predate a remap; " +
-        "re-run maintenance after OPTIMIZE/restore to refresh)")
-  }
-
-  /** Render the deferred verdict for pointers kept PROVISIONALLY by
-    * [[publishRetroPointer]]'s expired outcome-wait. Lease-free like the
-    * rest of maintenance: when a writer holds the lease the markers stay
-    * for the next round. For each marker: the pointer may be gone
-    * (retraction flicker — marker moot); the version may have HELD (the
-    * slow mutation was a cleanup or aborted — the deferred kept verdict,
-    * content exactly recon(v)); a commit may have landed past v — then
-    * the pointer is adjudicated exactly like a witnessed overlap:
-    * retract outright when it no longer anchors the horizon, else the
-    * anchor-copy verdict.
-    */
-  private def resolveRetroReverify(current: Long): Unit = {
-    if (!fs.exists(retroDir)) return
-    val marked = fs.listStatus(retroDir).toSeq.map(_.getPath.getName)
-      .filter(n => n.startsWith("v") && n.endsWith(".reverify"))
-      .flatMap(_.stripPrefix("v").stripSuffix(".reverify").toLongOption)
-    if (marked.isEmpty) return
-    if (fs.exists(lockFile)) return // mutation in flight: next round
-    marked.sorted.foreach { m =>
-      if (!fs.exists(retroPtrPath(m)))
-        () // already retracted elsewhere — marker is moot
-      else if (m == current)
-        logInfo(s"checkpoint maintenance on $path: re-verified the v$m " +
-          "pointer — the overlapping mutation released the lease without " +
-          "moving the version; content is exactly recon(v) — kept")
-      else if (!pointerAnchorsHorizon(m)) {
-        fs.delete(retroPtrPath(m), false)
-        logInfo(s"checkpoint maintenance on $path: re-verified the v$m " +
-          "pointer — retracted (not anchor-load-bearing; next maintenance " +
-          "re-runs)")
-      } else
-        adjudicateOverlappedPointer(m)
-      fs.delete(retroReverifyPath(m), false)
-    }
-  }
-
-  /** The dir-verification half of async maintenance, also LEASE-FREE: a
-    * listing is only trusted when no writer held the lease before or
-    * after it and the version stayed put — any overlap discards the
-    * result (a mid-publish listing would report staged files as drift).
-    * Confirmed drift — an out-of-band writer — invalidates the state
-    * cache so the NEXT commit takes the listing path and absorbs it into
-    * the log, the same bounded-drift contract the synchronous
-    * checkpoint's listing used to provide. A commit racing the
-    * invalidation can reinstate its own state first; the drift then
-    * surfaces again at the next maintenance run — absorption is
-    * eventual, never lost.
-    */
-  private def verifyDirOpportunistic(): Unit = {
-    try {
-      if (fs.exists(lockFile)) return // writer mid-mutation: skip this round
-      val stOpt = CommitLiveCache.getAny(qualifiedRoot)
-        .filter(_.version == version)
-      stOpt.foreach { st =>
-        val live = listParquet(new Path(path))
-          .map(f => fs.makeQualified(new Path(f._1)).toString).toSet
-        val raced = fs.exists(lockFile) || version != st.version
-        if (!raced) {
-          if (live != st.files.keySet) {
-            logWarning(s"checkpoint maintenance on $path: live dir " +
-              s"diverged from state at v${st.version} " +
-              s"(${live.size} on disk vs ${st.files.size} cached) — " +
-              "invalidating; the next commit re-lists and absorbs")
-            // markDrift, not plain invalidation: seedStateFromLog would
-            // otherwise faithfully rebuild the pre-drift state from the
-            // log and the strays would never be absorbed
-            CommitLiveCache.markDrift(qualifiedRoot)
-            trustedDirVersion = Long.MinValue
-          } else trustedDirVersion = st.version
-        }
-      }
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        logWarning(s"checkpoint maintenance on $path: dir verification " +
-          s"skipped (${e.getMessage})")
-    }
-  }
-
-  /** Block until every checkpoint-maintenance task queued so far ran —
-    * the deterministic hook benches and operators use before measuring
-    * or shutting down.
-    */
-  def awaitCheckpointMaintenance(): Unit = CheckpointMaintenance.await()
 
   /** Reconstruct the parent commit state — path → (len, rows) plus the
     * running totals — from the LOG (checkpoint rows + delta churn +
@@ -4769,10 +3932,7 @@ final class ManagedTable(spark: SparkSession, val path: String)
     */
   private def seedStateFromLog(v0: Long): Option[CommitLiveCache.State] = {
     if (v0 < 0) return None
-    // maintenance observed dir↔log drift: only a LISTING commit may
-    // resolve it — a log-derived seed would rebuild the pre-drift state
-    if (CommitLiveCache.driftSuspected(qualifiedRoot)) return None
-    val (parts, adds, excluded) = distributedBase(v0).getOrElse(return None)
+    val (ckpt, adds, excluded) = distributedBase(v0).getOrElse(return None)
     val addM = addsMeta(adds)
     val addEntries = new scala.collection.mutable.ArrayBuffer[(String, (Long, Long))]
     adds.foreach { p =>
@@ -4785,7 +3945,7 @@ final class ManagedTable(spark: SparkSession, val path: String)
     val baseEntries: Seq[(String, (Long, Long))] =
       if (useDistributedPlanning) {
         import spark.implicits._
-        val raw = spark.read.parquet(parts.map(_.toString): _*)
+        val raw = spark.read.parquet(ckpt.toString)
         val cols = raw.columns.toSet
         if (!cols("len") || !cols("rows")) return None
         val exB = spark.sparkContext.broadcast(excluded)
@@ -4802,7 +3962,7 @@ final class ManagedTable(spark: SparkSession, val path: String)
           }
         finally exB.destroy()
       } else {
-        checkpointRowIter(parts).flatMap { case (p, meta) =>
+        checkpointRowIter(ckpt).flatMap { case (p, meta) =>
           if (excluded.contains(p)) None
           else meta match {
             case Some((len, rows, _)) => Some(p -> ((len, rows)))
@@ -4848,18 +4008,14 @@ final class ManagedTable(spark: SparkSession, val path: String)
     */
   private def checkpointFilesOf(txt: String): Option[Seq[String]] =
     jsonStringArray(txt, "files")
-      .orElse(jsonString(txt, "filesParquet")
+      .orElse(checkpointSidecarOf(txt)
         .map(name => readCheckpointParquet(new Path(logDir, name))))
-      .orElse(jsonStringArray(txt, "filesParquetParts")
-        .map(_.flatMap(n => readCheckpointParquet(new Path(logDir, n)))))
 
-  /** Sidecar names a checkpoint manifest points at — one for the single
-    * format, several for multi-part; None for inline-JSON or delta
-    * manifests.
+  /** The sidecar a checkpoint manifest points at; None for inline-JSON or
+    * delta manifests.
     */
-  private def checkpointSidecarsOf(txt: String): Option[Seq[String]] =
-    jsonString(txt, "filesParquet").map(Seq(_))
-      .orElse(jsonStringArray(txt, "filesParquetParts"))
+  private def checkpointSidecarOf(txt: String): Option[String] =
+    jsonString(txt, "filesParquet")
 
   /** The data-file list of logged version `v`: from `v`'s own manifest
     * when it is a checkpoint (full `files` list, inline or parquet), else
@@ -4876,19 +4032,13 @@ final class ManagedTable(spark: SparkSession, val path: String)
     while (base.isEmpty) {
       require(i >= 0,
         s"no checkpoint manifest at or below v$v in $logDir — corrupt log")
-      // a retro (async) checkpoint at i ends the walk exactly like a
-      // checkpoint manifest — it IS recon(i), published post-commit; a
-      // dangling pointer reads as absent and the manifest chain covers
-      base = retroFiles(i)
-      if (base.isEmpty) {
-        val txt = manifestText(i)
-        checkpointFilesOf(txt) match {
-          case some @ Some(_) => base = some
-          case None =>
-            deltas.prepend((jsonStringArray(txt, "add").getOrElse(Nil),
-              jsonStringArray(txt, "remove").getOrElse(Nil)))
-            i -= 1
-        }
+      val txt = manifestText(i)
+      checkpointFilesOf(txt) match {
+        case some @ Some(_) => base = some
+        case None =>
+          deltas.prepend((jsonStringArray(txt, "add").getOrElse(Nil),
+            jsonStringArray(txt, "remove").getOrElse(Nil)))
+          i -= 1
       }
     }
     deltas.foldLeft(base.get.toSet) { case (s, (a, r)) => s ++ a -- r }
@@ -5267,76 +4417,23 @@ final class ManagedTable(spark: SparkSession, val path: String)
     def manifestAnchors(h: Long): Boolean = {
       val txt = manifestText(h)
       jsonStringArray(txt, "files").isDefined ||
-        checkpointSidecarsOf(txt).exists(names =>
-          names.forall(n => fs.exists(new Path(logDir, n))))
-    }
-    // a RETRO checkpoint anchors too (async-checkpoint logs may hold
-    // nothing but deltas) — but only with its artifacts verifiably
-    // present, same conservatism as the pointer-manifest check. The
-    // probe CAPTURES the verified text: the hardening below must not
-    // re-read the pointer, because the lease-free retraction in
-    // [[publishRetroPointer]] can delete it between probe and harden
-    // (probe sees it, retraction removes it, a re-read misses it →
-    // manifests deleted with no anchor copy).
-    var retroAnchorTxt: Option[String] = None
-    def retroAnchors(h: Long): Boolean = {
-      retroAnchorTxt = retroText(h).filter { rt =>
-        jsonStringArray(rt, "files").isDefined ||
-          checkpointSidecarsOf(rt).exists(names =>
-            names.forall(n => fs.exists(new Path(logDir, n))))
-      }
-      retroAnchorTxt.isDefined
+        checkpointSidecarOf(txt).exists(n => fs.exists(new Path(logDir, n)))
     }
     var horizon = beforeV
-    while (horizon > 0 && !manifestAnchors(horizon) && !retroAnchors(horizon))
-      horizon -= 1
-    // anchoring on a retro checkpoint ALONE (the manifest at the horizon
-    // is a delta) is the one moment retro-unawareness turns from slower
-    // into WRONG — a build that ignores `_checkpoints.d` would walk past
-    // the horizon into deleted manifests. Gate readers before deleting.
-    if (horizon > 0 && !manifestAnchors(horizon)) {
-      ensureFeature("checkpoint-retro", reader = true)
-      // HARDEN the anchor before any deletion: copy the pointer — the
-      // text CAPTURED at the anchor probe above, never a re-read — to a
-      // name the lease-free retraction never touches
-      // ([[retroAnchorPath]]). Under the commit lock, so the copy and
-      // the deletions are one critical section against other cleanups.
-      retroAnchorTxt.foreach(txt =>
-        writeAtomic(retroAnchorPath(horizon), txt))
-    }
+    while (horizon > 0 && !manifestAnchors(horizon)) horizon -= 1
     (0L until horizon).foreach { v =>
       fs.delete(new Path(logDir, f"v$v%05d.json"), false)
-      fs.delete(retroPtrPath(v), false)
-      fs.delete(retroAnchorPath(v), false)
-      fs.delete(retroReverifyPath(v), false)
       fs.delete(ckptParquetPath(v), false)
       fs.delete(dvFile(v), false)
     }
-    // multi-part sidecars (vNNNNN.pKKK.checkpoint.parquet) below the
-    // horizon: one listing, matched by version prefix — the fixed-name
-    // loop above can't enumerate an unknown part count
-    fs.listStatus(logDir).foreach { st =>
-      val n = st.getPath.getName
-      if (st.isFile && n.endsWith(".checkpoint.parquet") && n.startsWith("v"))
-        n.drop(1).takeWhile(_.isDigit).toLongOption match {
-          case Some(ver) if ver < horizon => fs.delete(st.getPath, false)
-          case _ =>
-        }
-    }
-    // reap crash-orphaned checkpoint-sidecar tmp files — AGE-GATED: the
-    // locked writers (commit, remap, drop-feature) can't be mid-write
-    // while this method holds the lock, but the lease-free async-
-    // checkpoint maintenance thread writes these tmps WITHOUT the lock,
-    // so a fresh tmp may be a live retro-sidecar write. An hour-old tmp
-    // is crash debris under any venue. Other log tmps can be live
-    // without the lease too (the history self-heal writeAtomics
-    // _history.txt from pure read paths) and are never reaped here.
-    val tmpReapAgeMs = 3600L * 1000
-    val nowMs = System.currentTimeMillis()
+    // reap crash-orphaned checkpoint-sidecar tmp files: every writer of
+    // them (commit, remap) holds the lease this method holds, so none can
+    // be mid-write. Other log tmps can be live without the lease (the
+    // history self-heal writeAtomics _history.txt from pure read paths)
+    // and are never reaped here.
     fs.listStatus(logDir).foreach { st =>
       if (st.isFile &&
-          st.getPath.getName.contains(".checkpoint.parquet.tmp-") &&
-          nowMs - st.getModificationTime > tmpReapAgeMs)
+          st.getPath.getName.contains(".checkpoint.parquet.tmp-"))
         fs.delete(st.getPath, false)
     }
   }
@@ -8085,9 +7182,20 @@ final class ManagedTable(spark: SparkSession, val path: String)
     reapTmp(logDir)
   }
 
-  /** Compaction (M5, `optimize().executeCompaction()`): rewrite to n files. */
-  def compact(numFiles: Int): Unit =
-    replaceWith(maintRead().repartition(numFiles), Nil, "OPTIMIZE")
+  /** Compaction (M5, `optimize().executeCompaction()`): rewrite to n files.
+    * A partitioned table keeps its logged partition columns — rewriting it
+    * unpartitioned would leave the next partitioned MERGE pruning against
+    * a layout that no longer exists — and clusters by them like
+    * [[compactSmall]], so each partition dir gets one file.
+    */
+  def compact(numFiles: Int): Unit = withCommitLock {
+    ensureBootstrapped()
+    val pcs = loggedPartitionCols(version)
+    val df = maintRead()
+    replaceWith(
+      if (pcs.nonEmpty) df.repartition(numFiles, pcs.map(col): _*)
+      else df.repartition(numFiles), pcs, "OPTIMIZE")
+  }
 
   /** Incremental compaction — Delta's ACTUAL `OPTIMIZE` semantics: only
     * files below `minFileBytes` are rewritten, bin-packed toward
@@ -8394,14 +7502,6 @@ private[table] class CommitLiveCacheBudgeted(val maxTables: Int,
     Option(lru.get(root)).filter(_.version == expectVersion)
   }
 
-  /** The cached state whatever its version — checkpoint maintenance
-    * checkpoints the LATEST state it can see (a later commit than the
-    * one that scheduled it is strictly better: fewer trailing deltas).
-    */
-  def getAny(root: String): Option[State] = synchronized {
-    Option(lru.get(root))
-  }
-
   def put(root: String, st: State): Unit = synchronized {
     Option(lru.remove(root)).foreach(old => totalEntriesVar -= old.files.size)
     lru.put(root, st)
@@ -8420,19 +7520,6 @@ private[table] class CommitLiveCacheBudgeted(val maxTables: Int,
   def invalidate(root: String): Unit = synchronized {
     Option(lru.remove(root)).foreach(old => totalEntriesVar -= old.files.size)
   }
-
-  /** Roots where maintenance OBSERVED dir↔log drift: state must not be
-    * re-seeded from the log (seedStateFromLog would faithfully rebuild
-    * the pre-drift live set and the out-of-band files would never be
-    * absorbed) until a LISTING-path commit re-reads the dir as truth
-    * and clears the flag. Plain invalidation is not enough — the log
-    * can resurrect the state; only a listing can resolve the drift.
-    */
-  private val drift = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  def markDrift(root: String): Unit = { invalidate(root); drift.add(root); () }
-  def driftSuspected(root: String): Boolean = drift.contains(root)
-  def clearDrift(root: String): Unit = { drift.remove(root); () }
 }
 
 private[table] object CommitLiveCache
@@ -8493,59 +7580,6 @@ private[table] object PhysicalSchemaCache {
   }
 
   def invalidate(root: String): Unit = { m.remove(root); () }
-}
-
-/** Post-commit checkpoint maintenance behind
-  * `graft.manifest.asyncCheckpoint`: one process-wide daemon thread
-  * drains retro-checkpoint tasks FIFO (a driver hot-writes a handful of
-  * tables; serializing their maintenance bounds background I/O).
-  * Scheduling coalesces per table root — a burst of checkpoint-due
-  * commits queues ONE run, which checkpoints the latest state it sees.
-  * Failures log and drop: the delta chain never depends on a checkpoint
-  * landing, and the next checkpoint-due commit reschedules. A JVM exit
-  * with a task queued loses nothing but walk depth — identical to the
-  * crash-before-checkpoint window the design tolerates.
-  */
-private[table] object CheckpointMaintenance
-    extends org.apache.spark.internal.Logging {
-  /** Test hook: while true, [[schedule]] drops tasks — specs use it to
-    * pin the trailing-checkpoint window deterministically.
-    */
-  @volatile private[table] var suspended: Boolean = false
-
-  private val queued =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private val pool = java.util.concurrent.Executors.newSingleThreadExecutor(
-    (r: Runnable) => {
-      val t = new Thread(r, "graft-checkpoint-maintenance")
-      t.setDaemon(true)
-      t
-    })
-
-  def schedule(t: ManagedTable): Unit = {
-    if (suspended) return
-    val key = t.path
-    if (queued.add(key)) {
-      pool.submit(new Runnable {
-        def run(): Unit = {
-          queued.remove(key)
-          try t.runCheckpointMaintenance()
-          catch {
-            case scala.util.control.NonFatal(e) =>
-              logWarning(s"async checkpoint maintenance failed on $key " +
-                s"(next checkpoint-due commit reschedules): $e")
-          }
-        }
-      })
-      ()
-    }
-  }
-
-  /** Block until every task queued before this call ran. */
-  def await(): Unit = {
-    pool.submit(new Runnable { def run(): Unit = () }).get()
-    ()
-  }
 }
 
 private[table] case class FileMeta(rows: Long, stats: FileStats)
@@ -8640,8 +7674,8 @@ object ManagedTable {
     * changes), each supply `<key>` for every table whose `_props.txt`
     * does not set it. The FILE always wins, and nothing here is ever
     * persisted — the overlay is how an operator turns on e.g.
-    * `graft.manifest.asyncCheckpoint` fleet-wide without editing every
-    * table, and how the config-matrix soak drives the whole suite under
+    * `graft.manifest.checkpointFormat=parquet` fleet-wide without editing
+    * every table, and how the config-matrix soak drives the whole suite under
     * one configuration. Snapshotted once per process: a mid-process
     * change to the environment is not a supported reconfiguration path.
     */

@@ -103,36 +103,22 @@ object ManifestBench {
         f"resolved=${files2.size}%,d entries, " +
         f"~mem delta=${(memAfter2 - memBefore2) / 1e6}%.0f MB, " +
         f"ckpt bytes json=$jsonBytes%,d vs parquet=$pqBytes%,d")
-      // ---- multi-part checkpoint (graft.manifest.checkpointPartSize):
-      // same rows as 8 parts written in parallel — the claimed motivation
-      // (the single-threaded parquet write is the commit's long pole at
-      // 1e7) measured against the single write above. Rows carry stats
-      // ("k" clustered by file) so the distributed-planner prune below
-      // has something to skip with.
+      // ---- the same checkpoint rewritten with per-file stats ("k"
+      // clustered by file) so the distributed-planner prune below has
+      // something to skip with
       def stat(i: Long) = Some((1000L, 100L, MetadataPlane.statsCells(Map(
         "k" -> (("i", (i * 100).toString, (i * 100 + 99).toString, 0L))))))
-      val partSize = (n / 8 + 1).toInt
       var statEntries = (0L until n).map(i => p(i) -> stat(i))
-      // apples-to-apples single write: same stat-bearing rows, one file
       val tSW0 = System.nanoTime()
       t2.writeCheckpointParquet(
         new Path(log, "v00000.checkpoint.parquet"), statEntries)
       val sWriteMs = (System.nanoTime() - tSW0) / 1e6
-      val tMP0 = System.nanoTime()
-      t2.writeCheckpointParquetParts(0L, statEntries, partSize)
-      val mpWriteMs = (System.nanoTime() - tMP0) / 1e6
-      val ptr2 = fs.create(new Path(log, "v00000.json"), true)
-      try ptr2.write(("{\"version\":0,\"filesParquetParts\":[" +
-        (0 until 8).map(k => f""""v00000.p$k%03d.checkpoint.parquet"""")
-          .mkString(",") + "]}").getBytes("UTF-8"))
-      finally ptr2.close()
-      println(f"[manifest-bench] n=$n%,d files MULTI-PART ckpt (8 parts, " +
-        f"parallel): write=$mpWriteMs%.0f ms vs single(with stats)=" +
-        f"$sWriteMs%.0f ms")
-      // distributed planner over the parts: the prune runs as a Spark job
-      // reading every part concurrently; the driver collects ONLY the
-      // survivors. Peak driver heap sampled at 10 ms during the plan —
-      // the r7 "<512 MB at 1e7" design claim, measured.
+      println(f"[manifest-bench] n=$n%,d files PARQUET ckpt with stats: " +
+        f"write=$sWriteMs%.0f ms")
+      // distributed planner over the checkpoint: the prune runs as a Spark
+      // job; the driver collects ONLY the survivors. Peak driver heap
+      // sampled at 10 ms during the plan — the r7 "<512 MB at 1e7" design
+      // claim, measured.
       val t3 = new ManagedTable(spark, root)
       statEntries = null // drop the bench's own O(n) synth before measuring
       System.gc()
@@ -153,14 +139,13 @@ object ManifestBench {
       sampling = false; sampler.join()
       System.gc()
       val retained = (rt.totalMemory() - rt.freeMemory()) - base3
-      println(f"[manifest-bench] n=$n%,d files DISTRIBUTED prune over " +
-        f"parts: plan=$dpMs%.0f ms, kept=${kept.map(_.size).getOrElse(-1)}%,d, " +
+      println(f"[manifest-bench] n=$n%,d files DISTRIBUTED prune: " +
+        f"plan=$dpMs%.0f ms, kept=${kept.map(_.size).getOrElse(-1)}%,d, " +
         f"driver heap base=${base3 / 1e6}%.0f MB peak=${peak.get / 1e6}%.0f MB " +
         f"(delta=${(peak.get - base3) / 1e6}%.0f MB, retained after " +
         f"gc=${retained / 1e6}%.0f MB)")
-      // ---- streaming snapshot assembly over the parts (measured AFTER
-      // the prune so its cache blocks can't pollute the prune's retained
-      // figure): building the index RDD runs the one sort per pin
+      // ---- streaming snapshot assembly (measured AFTER the prune so its
+      // cache blocks can't pollute the prune's retained figure): building the index RDD runs the one sort per pin
       // (zipWithIndex's offset job fills the serialized cache); each
       // paced slice is then a filter over cached blocks — the numbers
       // behind retiring the streaming-source driver-manifest ceiling
@@ -233,91 +218,19 @@ object ManifestBench {
         CommitLiveCache.invalidate(rootQ) // n synthetic entries: free them
         fs.delete(new Path(croot).getParent, true)
       }
-      // ---- ASYNC CHECKPOINT (r11): with graft.manifest.asyncCheckpoint
-      // the checkpoint-due commit is as fast as the others — it writes a
-      // plain delta and the checkpoint trails as maintenance, assembled
-      // INCREMENTALLY from the previous parquet checkpoint ± churn
-      // (Delta's async + incremental checkpointing). Measured: per-commit
-      // latency THROUGH two checkpoint boundaries against an n-file
-      // parent state, then the trailing maintenance catch-up time (the
-      // old inline cost: the ~60 s sidecar fold + sync write at 1e7).
-      locally {
-        val croot = java.nio.file.Files
-          .createTempDirectory(s"async-ckpt-bench-$exp").toString + "/t"
-        val ct = new ManagedTable(spark, croot)
-        import spark.implicits._
-        ct.overwrite(Seq((0L, "seed")).toDF("k", "v"))
-        ct.setProperties(Map(
-          "graft.manifest.checkpointInterval" -> "4",
-          "graft.manifest.asyncCheckpoint" -> "true",
-          "graft.manifest.verifyDirInMaintenance" -> "false", // synthetic state
-          "graft.manifest.checkpointFormat" -> "parquet",
-          "graft.metadata.distributedPlanning" -> "never", // A: driver venue
-          "graft.manifest.checkpointPartSize" -> (n / 8 + 1).toString))
-        val rootQ = fs.makeQualified(new Path(croot)).toString
-        val st0 = CommitLiveCache.get(rootQ, ct.version).get
-        CommitLiveCache.put(rootQ, CommitLiveCache.State(st0.version,
-          st0.files ++ (0L until n).map(i => p(i) -> ((1000L, 100L))),
-          st0.liveRows + 100L * n, st0.sizeBytes + 1000L * n))
-        // seed the incremental base: a parquet checkpoint of the current
-        // state (v1 path-only rows are fine), pointed at by a retro entry
-        val stSeed = CommitLiveCache.get(rootQ, ct.version).get
-        val seedNames = ct.writeCheckpointParquetParts(ct.version,
-          stSeed.files.keys.toSeq.sorted.map(_ -> None), (n / 8 + 1).toInt)
-        val ptrOut = fs.create(ct.retroPtrPath(ct.version), true)
-        try ptrOut.write((s"""{"version":${ct.version},""" +
-          s""""filesParquetParts":[${seedNames.map(s => "\"" + s + "\"")
-            .mkString(",")}]}""").getBytes("UTF-8"))
-        finally ptrOut.close()
-        val times = (1 to 8).map { i =>
-          val tA0 = System.nanoTime()
-          ct.append(Seq((i.toLong, s"row$i")).toDF("k", "v"))
-          (System.nanoTime() - tA0) / 1e6
-        }
-        val tM0 = System.nanoTime()
-        ct.awaitCheckpointMaintenance()
-        val maintMs = (System.nanoTime() - tM0) / 1e6
-        println(f"[manifest-bench] n=$n%,d live files ASYNC-CKPT COMMITS " +
-          f"(interval 4; checkpoint-due at appends 4 and 8): " +
-          times.map(t => f"$t%.0f ms").mkString(", ") +
-          f" — boundary == non-boundary is the async contract; " +
-          f"trailing incremental checkpoint catch-up=$maintMs%.0f ms " +
-          f"(venue=${ct.lastRetroVenue})")
-        // B: the same trailing catch-up assembled AS A SPARK JOB from the
-        // retro just published ± fresh churn (distributed maintenance) —
-        // the driver holds only churn + part names, the n-row copy runs
-        // on executors
-        ct.setProperties(Map(
-          "graft.metadata.distributedPlanning" -> "always"))
-        (9 to 12).foreach(i =>
-          ct.append(Seq((i.toLong, s"row$i")).toDF("k", "v")))
-        val tD0 = System.nanoTime()
-        ct.awaitCheckpointMaintenance()
-        val distMs = (System.nanoTime() - tD0) / 1e6
-        println(f"[manifest-bench] n=$n%,d live files ASYNC-CKPT trailing " +
-          f"catch-up DISTRIBUTED=$distMs%.0f ms " +
-          f"(venue=${ct.lastRetroVenue}) vs driver=$maintMs%.0f ms")
-        CommitLiveCache.invalidate(rootQ)
-        fs.delete(new Path(croot).getParent, true)
-      }
-      // ---- CHECKPOINT-FROM-STATE A/B (r11 soak): the same checkpoint-due
-      // commit measured on the LISTING path vs assembled from state ±
-      // churn (graft.manifest.checkpointFromState) — over n REAL (empty,
-      // sidecar-covered) files so the listing side pays genuine dir-walk
-      // RPCs, the cost the state path deletes. Run at ≤1e6 (creating 1e7
-      // real files is not a bench, it's an outage).
+      // ---- SYNC CHECKPOINT: the checkpoint-due commit, assembled from
+      // the cached state ± churn (never a dir listing), over n REAL
+      // (empty, sidecar-covered) files. Run at ≤1e6 (creating 1e7 real
+      // files is not a bench, it's an outage).
       if (n <= 1000000) locally {
         val croot = java.nio.file.Files
-          .createTempDirectory(s"cfs-bench-$exp").toString + "/t"
+          .createTempDirectory(s"ckpt-bench-$exp").toString + "/t"
         val ct = new ManagedTable(spark, croot)
         import spark.implicits._
         ct.overwrite(Seq((0L, "seed")).toDF("k", "v"))
         ct.setProperties(Map(
           "graft.manifest.checkpointInterval" -> "4",
-          "graft.manifest.checkpointFormat" -> "parquet",
-          "graft.manifest.checkpointPartSize" -> (n / 8 + 1).toString,
-          // side A measures the r10 LISTING behavior (default is now on)
-          "graft.manifest.checkpointFromState" -> "false"))
+          "graft.manifest.checkpointFormat" -> "parquet"))
         // n empty part files, each pre-covered by a sidecar entry keyed
         // (path, len=0) so no fold ever opens a footer
         val dataDir = new Path(croot)
@@ -337,30 +250,20 @@ object ManifestBench {
         val tB0 = System.nanoTime()
         ct.bootstrap() // RECOVER: absorbs the n files (a listing checkpoint)
         val bootMs = (System.nanoTime() - tB0) / 1e6
-        // appends 1-3 ride the fast path; append 4 is checkpoint-due →
-        // LISTING-path checkpoint (A)
+        // appends 1-3 ride the fast path; append 4 is checkpoint-due
         for (i <- 1 to 3) ct.append(Seq((i.toLong, s"r$i")).toDF("k", "v"))
         val tA1 = System.nanoTime()
-        ct.append(Seq((100L, "ckptA")).toDF("k", "v"))
-        val listingMs = (System.nanoTime() - tA1) / 1e6
-        // appends 5-7 fast; append 8 checkpoint-due with
-        // checkpointFromState (the r11 default) → state-assembled (B)
-        ct.setProperties(Map("graft.manifest.checkpointFromState" -> "true"))
-        for (i <- 5 to 7) ct.append(Seq((i.toLong, s"r$i")).toDF("k", "v"))
-        val tB1 = System.nanoTime()
-        ct.append(Seq((101L, "ckptB")).toDF("k", "v"))
-        val stateMs = (System.nanoTime() - tB1) / 1e6
-        println(f"[manifest-bench] n=$n%,d REAL files CKPT-FROM-STATE A/B: " +
+        ct.append(Seq((100L, "ckpt")).toDF("k", "v"))
+        val ckptMs = (System.nanoTime() - tA1) / 1e6
+        println(f"[manifest-bench] n=$n%,d REAL files SYNC CHECKPOINT: " +
           f"bootstrap(listing ckpt)=$bootMs%.0f ms, checkpoint-due commit " +
-          f"LISTING path=$listingMs%.0f ms vs FROM-STATE=$stateMs%.0f ms " +
-          f"(both fold the cached sidecar; the delta is the dir walk + " +
-          f"consistency sidecar rewrite the state path retires)")
+          f"from state=$ckptMs%.0f ms")
         // ---- SEED-FROM-LOG (r11): a fresh process's FIRST commit used
         // to pay the listing path once to warm the state cache; with the
         // handle's dir↔log trust already established, the parent state
-        // now seeds from the v8 checkpoint's parquet rows instead —
-        // measured as (cold-state append) vs the FROM-STATE number above
-        // (same commit, warm state).
+        // now seeds from the v4 checkpoint's parquet rows instead —
+        // measured as (cold-state append) vs the checkpoint number above
+        // (warm state).
         locally {
           val rootQ2 = fs.makeQualified(new Path(croot)).toString
           CommitLiveCache.invalidate(rootQ2)

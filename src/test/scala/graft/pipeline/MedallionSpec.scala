@@ -69,4 +69,43 @@ class MedallionSpec extends SparkSpec {
     assert(m.silverTxn.read.agg(count(lit(1)), sum("amount")).collect()(0) == before)
     assert(m.goldDaily.read.orderBy("date").collect().toSeq == dailyBefore)
   }
+
+  test("a partitioned MERGE after maintenance keeps every silver row; " +
+      "OPTIMIZE keeps the month partitioning") {
+    val wh = tmpDir("medallion-maint-merge") + "/wh"
+    val m = new Medallion(spark, wh, sfDir)
+    m.runBronze(); m.runSilver(); m.runGold() // runMaintain clusters gold
+    m.runMaintain()
+    val li = Tables.lineitem(spark, sfDir)
+    val or = Tables.orders(spark, sfDir)
+    // the batch mixes updates spread over many months (every 7th order's
+    // lines repriced, so MERGE rewrites files in many partitions) with new
+    // orders keyed above the current maximum
+    val maxKey = or.agg(max(col("o_orderkey").cast("long"))).head.getLong(0)
+    val updLi = li.filter(col("l_orderkey") % 7 === 0)
+      .withColumn("l_extendedprice", col("l_extendedprice") + 1)
+    val newOr = or.orderBy("o_orderkey").limit(20)
+      .withColumn("o_orderkey", col("o_orderkey") + maxKey)
+    val newLi = li.join(newOr.select((col("o_orderkey") - maxKey).as("k")),
+        col("l_orderkey") === col("k"))
+      .drop("k").withColumn("l_orderkey", col("l_orderkey") + maxKey)
+    val batchLi = updLi.unionByName(newLi)
+    val allOr = or.unionByName(newOr)
+    m.runIncremental(batchLi, allOr)
+    // plain-Spark recomputation of MERGE's source-wins upsert
+    val keys = Seq("l_orderkey", "l_linenumber")
+    val batch = m.silverTransactions(batchLi, allOr)
+    val expected = m.silverTransactions(li, or)
+      .join(batch.select(keys.map(col): _*), keys, "left_anti")
+      .unionByName(batch)
+    val got = m.silverTxn.read.select(expected.columns.map(col): _*)
+    assert(got.count() == expected.count(), "silver lost or duplicated rows")
+    assert(got.exceptAll(expected).isEmpty && expected.exceptAll(got).isEmpty,
+      "silver differs from the recomputation")
+    val optimize = m.silverTxn.history().filter(col("operation") === "OPTIMIZE")
+      .select("partitionColumns").collect().map(_.getSeq[String](0).toSeq)
+    assert(optimize.nonEmpty, "runMaintain committed no OPTIMIZE")
+    assert(optimize.forall(_ == Seq("ship_month")),
+      s"OPTIMIZE dropped the partitioning: ${optimize.toSeq}")
+  }
 }

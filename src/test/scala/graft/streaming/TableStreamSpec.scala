@@ -359,7 +359,6 @@ class TableStreamSpec extends SparkSpec {
       t.setProperties(Map(
         "graft.manifest.checkpointFormat" -> "parquet",
         "graft.manifest.checkpointInterval" -> "1",
-        "graft.manifest.checkpointPartSize" -> "3", // multi-part sidecars
         "graft.metadata.distributedPlanning" -> mode))
       t.overwrite(Seq.tabulate(7)(i => (i.toLong, s"v$i")).toDF("k", "v")
         .repartitionByRange(7, col("k")))

@@ -18,15 +18,8 @@ import org.apache.spark.sql.functions._
 class CommitFastPathSpec extends SparkSpec {
   import spark.implicits._
 
-  private def freshTable(name: String) = {
-    val t = new ManagedTable(spark, tmpDir(name) + "/t")
-    // this suite pins the SYNCHRONOUS checkpoint-due-commit shape (the
-    // boundary manifest carries the file list) — explicit, so ambient
-    // soak defaults (GRAFT_PROPERTY_DEFAULTS asyncCheckpoint=true) can't
-    // flip the shape under the assertions
-    t.setProperties(Map("graft.manifest.asyncCheckpoint" -> "false"))
-    t
-  }
+  private def freshTable(name: String) =
+    new ManagedTable(spark, tmpDir(name) + "/t")
 
   private def latestFilesSidecar(t: ManagedTable) =
     new java.io.File(t.path + "._log/_latest_files.txt")
@@ -167,7 +160,6 @@ class CommitFastPathSpec extends SparkSpec {
   test("opt-in checkpointFromState: checkpoint commits assemble from state, never the dir") {
     val t = freshTable("fp-ckpt-state")
     t.overwrite(Seq((0L, "r")).toDF("k", "v"))            // v0
-    t.setProperties(Map("graft.manifest.checkpointFromState" -> "true"))
     // plant an out-of-band stray: a LISTING-based checkpoint would absorb
     // it into the log; the state-based one must keep the log manifest-true
     Seq((99L, "stray")).toDF("k", "v").write.mode("append").parquet(t.path)
@@ -194,7 +186,6 @@ class CommitFastPathSpec extends SparkSpec {
   test("checkpointFromState: a DV delete AT the checkpoint boundary stays exact, and maintenance reconciles") {
     val t = freshTable("fp-ckpt-dv")
     t.overwrite(Seq((0L, "r")).toDF("k", "v"))            // v0
-    t.setProperties(Map("graft.manifest.checkpointFromState" -> "true"))
     for (i <- 1L to 9L) t.append(Seq((i, s"x$i")).toDF("k", "v")) // v1..v9
     // v10: the checkpoint-due commit is a DV-only delete (zero churn) —
     // the full file list assembles from state, bitmaps filter against it

@@ -29,12 +29,7 @@ class DistributedPlanningSpec extends SparkSpec {
     t.setProperties(Map(
       "graft.manifest.checkpointFormat" -> "parquet",
       "graft.manifest.checkpointInterval" -> "1",
-      "graft.metadata.distributedPlanning" -> "always",
-      // single-sidecar sync shape pinned: the v1-rewrite test edits "the
-      // latest checkpoint" as ONE file, which ambient multipart/async
-      // defaults would split or move to run-unique retro names
-      "graft.manifest.checkpointPartSize" -> "0",
-      "graft.manifest.asyncCheckpoint" -> "false"))
+      "graft.metadata.distributedPlanning" -> "always"))
     t.overwrite(clustered.repartitionByRange(8, col("k"))
       .sortWithinPartitions("k"))
     t
@@ -177,7 +172,6 @@ class DistributedPlanningSpec extends SparkSpec {
     t.setProperties(Map(
       "graft.manifest.checkpointFormat" -> "parquet",
       "graft.manifest.checkpointInterval" -> "1",
-      "graft.manifest.checkpointPartSize" -> "2",
       "graft.metadata.distributedPlanning" -> "always"))
     t.overwrite(spark.range(0, 400).selectExpr("id as k",
         "CASE WHEN id < 50 THEN NULL ELSE cast(id as double) / 7 END as x",
@@ -268,8 +262,7 @@ class DistributedPlanningSpec extends SparkSpec {
     val t = new ManagedTable(spark, tmpDir("dp-json") + "/t")
     // pin the founding commit to inline JSON BEFORE it happens — the test
     // IS "no parquet base exists", which ambient soak defaults would break
-    t.setProperties(Map("graft.manifest.checkpointFormat" -> "json",
-      "graft.manifest.asyncCheckpoint" -> "false"))
+    t.setProperties(Map("graft.manifest.checkpointFormat" -> "json"))
     t.overwrite(spark.range(100).selectExpr("id as k")
       .repartitionByRange(4, col("k")))
     t.setProperties(Map("graft.metadata.distributedPlanning" -> "always"))

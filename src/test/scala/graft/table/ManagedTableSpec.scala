@@ -752,11 +752,6 @@ class ManagedTableSpec extends SparkSpec {
 
   test("history checkpoint: a 50-commit table serves history without manifests") {
     val t = freshTable("mt-hist-ckpt")
-    // the "park every manifest but the head" step below assumes the head
-    // reconstructs O(1) through a SYNC checkpoint manifest; under ambient
-    // async defaults the retro pointer can lag and the delta walk would
-    // legitimately need the parked manifests — pin the sync shape
-    t.setProperties(Map("graft.manifest.asyncCheckpoint" -> "false"))
     t.overwrite(Seq((0L, "v0")).toDF("k", "v"))
     (1L to 50L).foreach(i => t.append(Seq((i, s"v$i")).toDF("k", "v")))
     val conf = spark.sparkContext.hadoopConfiguration

@@ -17,16 +17,14 @@ class ManifestDeltaSpec extends SparkSpec {
     new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
   }
 
-  /** This suite pins the inline-JSON + synchronous checkpoint LOG SHAPE
+  /** This suite pins the inline-JSON checkpoint LOG SHAPE
     * (`isCheckpoint` greps for `"files":[`), so every table declares that
     * shape explicitly — ambient soak defaults (GRAFT_PROPERTY_DEFAULTS
-    * parquet/async) must not flip what the assertions read.
+    * parquet) must not flip what the assertions read.
     */
   private def pinnedTable(name: String): ManagedTable = {
     val t = new ManagedTable(spark, tmpDir(name) + "/t")
-    t.setProperties(Map(
-      "graft.manifest.checkpointFormat" -> "json",
-      "graft.manifest.asyncCheckpoint" -> "false"))
+    t.setProperties(Map("graft.manifest.checkpointFormat" -> "json"))
     t
   }
   private def isCheckpoint(t: ManagedTable, v: Long): Boolean =

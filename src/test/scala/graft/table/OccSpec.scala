@@ -51,18 +51,14 @@ class OccSpec extends SparkSpec {
     assert(stagedSiblings(t).isEmpty, "staged tmp dirs must be reaped")
   }
 
-  test("parallel optimistic appends under MULTI-PART parquet checkpoints " +
-      "keep the log sane (format surface x concurrency)") {
-    val path = tmpDir("occ-multipart") + "/t"
+  test("parallel optimistic appends under parquet checkpoints keep the " +
+      "log sane") {
+    val path = tmpDir("occ-parquet-ckpt") + "/t"
     val seed = new ManagedTable(spark, path)
     seed.overwrite(Seq((0L, "seed")).toDF("id", "s"))
     seed.setProperties(Map(
       "graft.manifest.checkpointFormat" -> "parquet",
-      "graft.manifest.checkpointInterval" -> "2",
-      "graft.manifest.checkpointPartSize" -> "2",
-      // this test pins the SYNC multipart checkpoint shape — explicit so
-      // ambient soak defaults (GRAFT_PROPERTY_DEFAULTS) can't flip it
-      "graft.manifest.asyncCheckpoint" -> "false"))
+      "graft.manifest.checkpointInterval" -> "2"))
     val writers = 4
     val perWriter = 2
     import scala.concurrent.{Await, Future, ExecutionContext}
@@ -85,13 +81,13 @@ class OccSpec extends SparkSpec {
     assert(t.read.as[(Long, String)].collect().map(_._1).sorted.toSeq ==
       (0L to (writers * perWriter).toLong))
     // versions contiguous; every logged version reconstructs exactly
-    // through whatever mix of pointer/part/delta manifests the race wrote
+    // through whatever mix of pointer/delta manifests the race wrote
     val versions = t.history().collect().map(_.getAs[Long]("version")).sorted
     assert(versions.toSeq == (0L to versions.max))
     for (v <- 0L to t.version)
       assert(t.readVersion(v).count() == v + 1,
-        s"version $v reconstructed wrong under multi-part checkpoints")
-    assert(t.protocol._1.contains("checkpoint-parquet-multipart"))
+        s"version $v reconstructed wrong under parquet checkpoints")
+    assert(t.protocol._1.contains("checkpoint-parquet"))
   }
 
   test("schema change mid-stage conflicts; staged files reaped; table intact") {
@@ -384,7 +380,6 @@ class OccSpec extends SparkSpec {
     t.overwrite(Seq((0L, "seed")).toDF("id", "s"))
     t.setProperties(Map(
       "graft.manifest.checkpointFormat" -> "parquet",
-      "graft.manifest.checkpointPartSize" -> "3",
       "graft.metadata.distributedPlanning" -> "always"))
     for (i <- 1 to 10) t.append(Seq((i.toLong, s"x$i")).toDF("id", "s"))
     // v10 was a checkpoint commit: parquet rows with (len, rows) on disk.
@@ -415,11 +410,7 @@ class OccSpec extends SparkSpec {
     val path = tmpDir("occ-cfs-race") + "/t"
     val t = new ManagedTable(spark, path)
     t.overwrite(Seq((0L, "seed")).toDF("id", "s"))
-    t.setProperties(Map(
-      "graft.manifest.checkpointFormat" -> "parquet",
-      "graft.manifest.checkpointFromState" -> "true",
-      // pins the SYNC checkpoint-due-commit shape (v10 carries the list)
-      "graft.manifest.asyncCheckpoint" -> "false"))
+    t.setProperties(Map("graft.manifest.checkpointFormat" -> "parquet"))
     for (i <- 1 to 8) t.append(Seq((i.toLong, s"x$i")).toDF("id", "s")) // v8
     // writer A stages against v8; mid-stage writer B lands v9 (fast
     // delta); A then commits v10 — the CHECKPOINT-DUE version — which

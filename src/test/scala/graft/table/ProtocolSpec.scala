@@ -13,12 +13,9 @@ class ProtocolSpec extends SparkSpec {
   private def freshTable(name: String): ManagedTable = {
     val t = new ManagedTable(spark, tmpDir(name) + "/t")
     // this suite asserts protocol-set SHAPES from a no-feature baseline
-    // (and one test clobbers _protocol.txt by hand) — pin the inline-JSON
-    // sync log so ambient soak defaults can't register checkpoint
-    // features into the sets under test or race the clobber from the
-    // maintenance thread
-    t.setProperties(Map("graft.manifest.checkpointFormat" -> "json",
-      "graft.manifest.asyncCheckpoint" -> "false"))
+    // — pin the inline-JSON log so ambient soak defaults can't register
+    // checkpoint features into the sets under test
+    t.setProperties(Map("graft.manifest.checkpointFormat" -> "json"))
     t.overwrite(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "s"))
     t
   }
